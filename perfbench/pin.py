@@ -1,9 +1,10 @@
 """Pin the ``kg_transcripts`` output digest for a range of seeds.
 
-    python3 perfbench/pin.py 0 31
+    python3 perfbench/pin.py 0 39          # the sizes BENCHMARK.json runs
+    python3 perfbench/pin.py 7 7 small     # the seed test_small.py runs
 
 Runs one pass per seed in one JVM with the benchmark's own settings and
-writes ``{seed: [triples, digest]}`` for the current size into pinned.json.
+writes ``{seed: [triples, digest]}`` for the given size into pinned.json.
 Re-pin only together with a change that is meant to alter the KG output.
 """
 
@@ -35,7 +36,8 @@ def main(first: int, last: int, size: str = "full") -> None:
         ok, _ = wl.check(out)
         if not ok:
             raise SystemExit(f"seed {seed}: output fails its invariants")
-        table[str(seed)] = [wl.seen[0], str(wl.seen[1])]
+        (triples, digest), _manifest = wl.seen
+        table[str(seed)] = [triples, str(digest)]
         print(seed, table[str(seed)], file=sys.stderr)
     clear(os.path.join(run.WORK, "pin"))
     run._stop(spark)

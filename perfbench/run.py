@@ -41,8 +41,9 @@ CORES = 2
 #: memory the passes retain instead of the collector's resizing decisions
 HEAP = "1g"
 JVM_OPTIONS = f"-Xms{HEAP} -XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy"
-#: the workloads BENCHMARK.json lists; a traced run of any of them reports
-#: every per-layer metric of all of them (0 for a layer it does not call)
+#: the workloads BENCHMARK.json lists. Its per-layer list is the union of
+#: their layers, and every traced run must print that whole list, so a
+#: traced run reports 0 for the layers of the other listed workload
 LISTED = ("csvw2rdf_table", "kg_transcripts")
 
 
@@ -148,10 +149,10 @@ def per_layer_names(classes) -> dict[str, str]:
     import spans
     names = {}
     for cls in classes:
-        for layer in cls.layers:
+        for layer in cls.traced_layers():
             for m in spans.LAYER_METRICS:
                 names[f"{layer}.{m}"] = spans.unit_of(m)
-        for name in cls.extras:
+        for name in cls.traced_extras():
             names[name] = spans.unit_of(name)
     names["trace_overhead_s"] = "s"
     return names
@@ -214,7 +215,7 @@ def main(argv=None) -> int:
     if trace:
         (log,) = glob.glob(os.path.join(WORK, "eventlog", "*"))
         tracer.write(os.path.join(WORK, f"spans-{args.workload}-{args.seed}.json"))
-        layers = spans.layer_metrics(tracer, log, list(cls.layers))
+        layers = spans.layer_metrics(tracer, log, list(cls.traced_layers()))
         listed = [WORKLOADS[n] for n in LISTED] if cls.name in LISTED else [cls]
         units = per_layer_names(listed)
         values = dict.fromkeys(units, 0)
@@ -225,9 +226,10 @@ def main(argv=None) -> int:
             diag = wl.diagnostics(layers)
             correct = wl.diagnostics_ok(diag)
             values.update(diag)
+        # the companion's layers are not part of the untraced pass
         values["trace_overhead_s"] = statistics.median(
             sum(s["end"] - s["start"] for s in tracer.spans
-                if s["run_id"] == r and s["parent"] is not None)
+                if s["run_id"] == r and s["name"] in cls.layers)
             for r in traced) - wall_s
         metrics = {k: {"value": v, "unit": units[k]} for k, v in values.items()}
     else:

@@ -50,11 +50,11 @@ def test_traced_run_reports_every_layer(workload):
     listed = ([WORKLOADS[n] for n in run.LISTED] if workload in run.LISTED
               else [cls])
     assert set(metrics) == set(run.per_layer_names(listed))
-    for layer in cls.layers:
+    for layer in cls.traced_layers():
         assert metrics[f"{layer}.wall_s"]["value"] > 0
         assert metrics[f"{layer}.rows_out"]["value"] > 0
         assert metrics[f"{layer}.failed_tasks"]["value"] == 0
-    busy = [metrics[f"{layer}.cpu_s"]["value"] for layer in cls.layers]
+    busy = [metrics[f"{layer}.cpu_s"]["value"] for layer in cls.traced_layers()]
     assert all(v > 0 for v in busy), busy
 
 

@@ -45,6 +45,20 @@ class Workload:
     layers: tuple[str, ...] = ()
     extras: tuple[str, ...] = ()   # per-layer metrics beyond LAYER_METRICS
     min_warm = 1                   # warm passes a run makes at least
+    #: a workload whose layers this one's traced passes also run, on the
+    #: companion's own inputs and with its output check; untraced passes
+    #: (and so the end-to-end metrics) leave it out
+    companion: type[Workload] | None = None
+
+    @classmethod
+    def traced_layers(cls) -> tuple[str, ...]:
+        """Every layer a traced pass calls."""
+        return cls.layers + (cls.companion.layers if cls.companion else ())
+
+    @classmethod
+    def traced_extras(cls) -> tuple[str, ...]:
+        """Every extra metric a traced run reports."""
+        return cls.extras + (cls.companion.extras if cls.companion else ())
 
     def __init__(self, spark, work: str, seed: int, size: str):
         self.spark, self.work, self.seed, self.size = spark, work, seed, size
@@ -77,108 +91,6 @@ class Workload:
     def diagnostics_ok(self, diag) -> bool:
         """Whether the diagnostics agree with what the inputs planted."""
         return True
-
-
-# --------------------------------------------------------------------------
-# CSVW table → N-Triples
-# --------------------------------------------------------------------------
-
-class Csvw2RdfTable(Workload):
-    name = "csvw2rdf_table"
-    layers = ("sources.csv_source", "plans.csvw2rdf", "functions.ntriples.write")
-    extras = ("plans.csvw2rdf.triples_per_row", "plans.csvw2rdf.invalid_cells",
-              "plans.csvw2rdf.max_codegen_method_bytes",
-              "plans.csvw2rdf.codegen_compiles")
-    ROWS = {"full": 30_000, "small": 2_000}
-    PARTS = 4
-    # the first warm passes still plan with JIT-cold optimizer code; with a
-    # 3-pass median one such pass does not move wall_s
-    min_warm = 3
-
-    def setup(self):
-        from csvw_rdf_convertor_spark.descriptor_norm import normalize_descriptor
-        from csvw_rdf_convertor_spark.spec import parse_descriptor
-        self.table = parse_descriptor(normalize_descriptor(gen.descriptor())).tables[0]
-
-    def prepare(self):
-        t = gen.Table(self.seed, self.ROWS[self.size], malformed=True)
-        t.write_csv(self.input, self.PARTS)
-        self.malformed = t.malformed_cells
-        self.expected = gen.digest(t.ntriples())
-        self.invalid_cells = None
-
-    def _triples(self, df):
-        from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
-        return table_to_triples(df, self.table)
-
-    def _scan(self):
-        from csvw_rdf_convertor_spark.sources.csv_source import read_csv
-        return read_csv(self.spark, self.input, self.table)
-
-    def run_pass(self, out):
-        from csvw_rdf_convertor_spark.functions.ntriples import write_ntriples
-        write_ntriples(self._triples(self._scan()), out)
-
-    def traced_pass(self, tracer, run_id, out):
-        from csvw_rdf_convertor_spark.functions.ntriples import write_ntriples
-        rows = tracer.materialise("sources.csv_source", run_id, self._scan(), run_id)
-        triples = tracer.materialise("plans.csvw2rdf", run_id,
-                                     self._triples(rows), run_id)
-        with tracer.span("functions.ntriples.write", run_id, run_id) as group:
-            write_ntriples(triples, out)
-        tracer.rows[group] = tracer.rows[f"{run_id}/plans.csvw2rdf"]
-        if self.invalid_cells is None:
-            typed = [f"{gen.TABLE_URL}#{n}" for n, d, _ in gen.COLUMNS
-                     if d in gen.TYPED_IRI]
-            with job_group(self.spark.sparkContext, "diagnostics"):
-                self.invalid_cells = triples.where(
-                    F.col("pred").isin(typed)
-                    & F.col("obj_dtype").isin("", XSD_STRING)).count()
-        rows.unpersist()
-        triples.unpersist()
-
-    def check(self, out):
-        got = gen.digest(part_lines(out))
-        return got == self.expected, got[0]
-
-    def probe(self):
-        from csvw_rdf_convertor_spark.functions.ntriples import to_ntriples_lines
-        spark = self.spark
-        # codegenString compiles every WholeStageCodegen subtree and reports
-        # its largest method; AQE would hide the subtrees before execution
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            plan = to_ntriples_lines(self._triples(self._scan()))
-            text = spark._jvm.PythonSQLUtils.explainString(
-                plan._jdf.queryExecution(), "codegen")
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", "true")
-        sizes = [int(x) for x in re.findall(r"maxMethodCodeSize:(\d+)", text)]
-        # the compile probe bench.py runs: with fallback off a janino failure
-        # raises instead of silently interpreting the stage
-        spark.conf.set("spark.sql.codegen.fallback", "false")
-        try:
-            with job_group(spark.sparkContext, "diagnostics"):
-                to_ntriples_lines(self._triples(self._scan().limit(1000))).count()
-            compiles = 1
-        except Exception:  # noqa: BLE001 - any compile error means "no"
-            compiles = 0
-        finally:
-            spark.conf.set("spark.sql.codegen.fallback", "true")
-        self.codegen = max(sizes, default=0), compiles
-
-    def diagnostics(self, layers):
-        src = layers["sources.csv_source"]["rows_out"]
-        return {
-            "plans.csvw2rdf.triples_per_row":
-                layers["plans.csvw2rdf"]["rows_out"] / src if src else 0.0,
-            "plans.csvw2rdf.invalid_cells": self.invalid_cells,
-            "plans.csvw2rdf.max_codegen_method_bytes": self.codegen[0],
-            "plans.csvw2rdf.codegen_compiles": self.codegen[1],
-        }
-
-    def diagnostics_ok(self, diag) -> bool:
-        return diag["plans.csvw2rdf.invalid_cells"] == self.malformed
 
 
 # --------------------------------------------------------------------------
@@ -238,6 +150,123 @@ class Rdf2CsvwTable(Workload):
 
 
 # --------------------------------------------------------------------------
+# CSVW table → N-Triples
+# --------------------------------------------------------------------------
+
+class Csvw2RdfTable(Workload):
+    name = "csvw2rdf_table"
+    layers = ("sources.csv_source", "plans.csvw2rdf", "functions.ntriples.write")
+    extras = ("plans.csvw2rdf.triples_per_row", "plans.csvw2rdf.invalid_cells",
+              "plans.csvw2rdf.max_codegen_method_bytes",
+              "plans.csvw2rdf.codegen_compiles")
+    ROWS = {"full": 30_000, "small": 2_000}
+    PARTS = 4
+    # the first warm passes still plan with JIT-cold optimizer code; with a
+    # 3-pass median one such pass does not move wall_s
+    min_warm = 3
+    # the reverse direction uses the same terms; its layers are measured
+    # here so that a traced run of a listed workload covers them
+    companion = Rdf2CsvwTable
+
+    def setup(self):
+        from csvw_rdf_convertor_spark.descriptor_norm import normalize_descriptor
+        from csvw_rdf_convertor_spark.spec import parse_descriptor
+        self.table = parse_descriptor(normalize_descriptor(gen.descriptor())).tables[0]
+
+    def prepare(self):
+        t = gen.Table(self.seed, self.ROWS[self.size], malformed=True)
+        t.write_csv(self.input, self.PARTS)
+        self.malformed = t.malformed_cells
+        self.expected = gen.digest(t.ntriples())
+        self.invalid_cells = None
+        self.reverse = self.companion(self.spark, os.path.join(self.work, "reverse"),
+                                      self.seed, self.size)
+        self.reverse.setup()
+        self.reverse.prepare()
+
+    def _triples(self, df):
+        from csvw_rdf_convertor_spark.plans.csvw2rdf import table_to_triples
+        return table_to_triples(df, self.table)
+
+    def _scan(self):
+        from csvw_rdf_convertor_spark.sources.csv_source import read_csv
+        return read_csv(self.spark, self.input, self.table)
+
+    def run_pass(self, out):
+        from csvw_rdf_convertor_spark.functions.ntriples import write_ntriples
+        write_ntriples(self._triples(self._scan()), out)
+
+    def traced_pass(self, tracer, run_id, out):
+        from csvw_rdf_convertor_spark.functions.ntriples import write_ntriples
+        rows = tracer.materialise("sources.csv_source", run_id, self._scan(), run_id)
+        triples = tracer.materialise("plans.csvw2rdf", run_id,
+                                     self._triples(rows), run_id)
+        with tracer.span("functions.ntriples.write", run_id, run_id) as group:
+            write_ntriples(triples, out)
+        tracer.rows[group] = tracer.rows[f"{run_id}/plans.csvw2rdf"]
+        if self.invalid_cells is None:
+            typed = [f"{gen.TABLE_URL}#{n}" for n, d, _ in gen.COLUMNS
+                     if d in gen.TYPED_IRI]
+            with job_group(self.spark.sparkContext, "diagnostics"):
+                self.invalid_cells = triples.where(
+                    F.col("pred").isin(typed)
+                    & F.col("obj_dtype").isin("", XSD_STRING)).count()
+        rows.unpersist()
+        triples.unpersist()
+        # the reverse direction on its own seeded N-Triples: every source
+        # row must come back, or the traced pass fails
+        back = os.path.join(self.reverse.work, "out")
+        clear(back)
+        self.reverse.traced_pass(tracer, run_id, back)
+        if not self.reverse.check(back)[0]:
+            raise RuntimeError("rdf2csvw round trip lost or changed rows")
+
+    def check(self, out):
+        got = gen.digest(part_lines(out))
+        return got == self.expected, got[0]
+
+    def probe(self):
+        from csvw_rdf_convertor_spark.functions.ntriples import to_ntriples_lines
+        spark = self.spark
+        # codegenString compiles every WholeStageCodegen subtree and reports
+        # its largest method; AQE would hide the subtrees before execution
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            plan = to_ntriples_lines(self._triples(self._scan()))
+            text = spark._jvm.PythonSQLUtils.explainString(
+                plan._jdf.queryExecution(), "codegen")
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        sizes = [int(x) for x in re.findall(r"maxMethodCodeSize:(\d+)", text)]
+        # the compile probe bench.py runs: with fallback off a janino failure
+        # raises instead of silently interpreting the stage
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+        try:
+            with job_group(spark.sparkContext, "diagnostics"):
+                to_ntriples_lines(self._triples(self._scan().limit(1000))).count()
+            compiles = 1
+        except Exception:  # noqa: BLE001 - any compile error means "no"
+            compiles = 0
+        finally:
+            spark.conf.set("spark.sql.codegen.fallback", "true")
+        self.codegen = max(sizes, default=0), compiles
+
+    def diagnostics(self, layers):
+        src = layers["sources.csv_source"]["rows_out"]
+        return {
+            "plans.csvw2rdf.triples_per_row":
+                layers["plans.csvw2rdf"]["rows_out"] / src if src else 0.0,
+            "plans.csvw2rdf.invalid_cells": self.invalid_cells,
+            "plans.csvw2rdf.max_codegen_method_bytes": self.codegen[0],
+            "plans.csvw2rdf.codegen_compiles": self.codegen[1],
+            **self.reverse.diagnostics(layers),
+        }
+
+    def diagnostics_ok(self, diag) -> bool:
+        return diag["plans.csvw2rdf.invalid_cells"] == self.malformed
+
+
+# --------------------------------------------------------------------------
 # transcripts → KG
 # --------------------------------------------------------------------------
 
@@ -252,6 +281,7 @@ class KgTranscripts(Workload):
     BUCKETS = 2   # one bucket per core
     PARTS = 4
     TURN_TRIPLES = 7   # per turn, plus one more when the turn names a tool
+    MANIFEST = ("bucket", "n_turns", "n_mentions", "n_links", "n_triples")
     MENTION_TRIPLES = 5
 
     def setup(self):
@@ -272,8 +302,7 @@ class KgTranscripts(Workload):
         with open(os.path.join(_HERE, "pinned.json"), encoding="utf-8") as f:
             pinned = json.load(f).get(self.name, {}).get(self.size, {})
         self.pinned = pinned.get(str(self.seed))
-        self.seen: tuple[int, int] | None = None
-        self.links = None
+        self.seen = None   # (digest, manifest rows) of the first pass
         self.cc_edges = self.cc_fast = None
 
     def _source(self):
@@ -281,27 +310,27 @@ class KgTranscripts(Workload):
 
     def run_pass(self, out):
         from csvw_rdf_convertor_spark.kg import pipeline
-        m = pipeline.run(self._source(), out, dictionary=self.dictionary,
-                         n_buckets=self.BUCKETS, resume=False)
-        self.links, self.mentions = m.links, m.mentions
+        pipeline.run(self._source(), out, dictionary=self.dictionary,
+                     n_buckets=self.BUCKETS, resume=False)
 
     def traced_pass(self, tracer, run_id, out):
-        """``pipeline.run``'s stages called one by one, each materialised
-        once under its own span."""
+        """``pipeline.run(resume=False)`` statement by statement (a replica:
+        keep it in step with ``pipeline.run``), each layer materialised once
+        under its own span. Its manifest must equal the plain passes'."""
         from csvw_rdf_convertor_spark.functions.terms import TRIPLE_COLS
         from csvw_rdf_convertor_spark.kg import cc, linking, mentions, pipeline
-        spark, n = self.spark, self.BUCKETS
-        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n)).cast("int")
+        spark, n_buckets, dictionary = self.spark, self.BUCKETS, self.dictionary
+        bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         with tracer.span("kg.pipeline.turn_triples", run_id, run_id) as group:
-            todo = (self._source().withColumn("bucket", bucket)
-                    .repartition(n, "bucket").persist())
+            todo = self._source().withColumn("bucket", bucket)
+            todo = todo.repartition(n_buckets, "bucket").cache()
             todo.count()
             turns = pipeline.turn_triples(todo, passthrough=("bucket",)).persist()
             tracer.rows[group] = turns.count()
         ments = tracer.materialise("kg.mentions", run_id,
-                                   mentions.detect_mentions(todo, self.dictionary),
+                                   mentions.detect_mentions(todo, dictionary),
                                    run_id)
-        aliases = linking.alias_table(spark, self.dictionary)
+        aliases = linking.alias_table(spark, dictionary)
         linked = tracer.materialise(
             "kg.linking", run_id,
             linking.link(ments, aliases).withColumn("bucket", bucket), run_id)
@@ -315,23 +344,27 @@ class KgTranscripts(Workload):
             "kg.pipeline.mention_triples", run_id,
             pipeline.mention_triples(linked, canon, passthrough=["bucket"]), run_id)
         with tracer.span("kg.pipeline.write", run_id, run_id) as group:
-            (turns.select("bucket", *TRIPLE_COLS)
-             .unionByName(m_triples.select("bucket", *TRIPLE_COLS)
-                          .repartition(n, "bucket"))
-             .write.mode("overwrite").partitionBy("bucket")
-             .parquet(f"{out}/triples"))
-            tagged = (todo.select("bucket", F.lit(0).alias("k"))
+            all_triples = (turns.select("bucket", *TRIPLE_COLS)
+                           .unionByName(m_triples.select("bucket", *TRIPLE_COLS)
+                                        .repartition(n_buckets, "bucket")))
+            (all_triples.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("bucket").parquet(f"{out}/triples"))
+            tagged = (todo.select("bucket", F.lit("turn").alias("kind"))
                       .unionByName(ments.withColumn("bucket", bucket)
-                                   .select("bucket", F.lit(1).alias("k")))
-                      .unionByName(linked.select("bucket", F.lit(2).alias("k"))))
-            counts = tagged.groupBy("bucket").agg(*[
-                F.sum((F.col("k") == k).cast("int")).alias(c)
-                for k, c in enumerate(("n_turns", "n_mentions", "n_links"))])
-            written = (spark.read.parquet(f"{out}/triples").groupBy("bucket")
-                       .agg(F.count(F.lit(1)).alias("n_triples")))
-            (counts.join(written, "bucket", "left").na.fill(0)
-             .withColumn("finished_at", F.current_timestamp())
-             .write.mode("append").parquet(f"{out}/manifest"))
+                                   .select("bucket", F.lit("mention").alias("kind")))
+                      .unionByName(linked.select("bucket", F.lit("link").alias("kind"))))
+            counts = (tagged.groupBy("bucket").agg(
+                F.sum(F.when(F.col("kind") == "turn", 1).otherwise(0)).alias("n_turns"),
+                F.sum(F.when(F.col("kind") == "mention", 1).otherwise(0)).alias("n_mentions"),
+                F.sum(F.when(F.col("kind") == "link", 1).otherwise(0)).alias("n_links")))
+            triple_counts = (spark.read.parquet(f"{out}/triples")
+                             .where(F.lit(True))
+                             .groupBy("bucket").agg(F.count("*").alias("n_triples")))
+            manifest = (counts.join(triple_counts, "bucket", "left").na.fill(0)
+                        .withColumn("finished_at", F.current_timestamp()))
+            manifest.write.mode("append").parquet(f"{out}/manifest")
+            spark.read.parquet(f"{out}/manifest").collect()
             tracer.rows[group] = (tracer.rows[f"{run_id}/kg.pipeline.turn_triples"]
                                   + tracer.rows[f"{run_id}/kg.pipeline.mention_triples"])
         if self.cc_edges is None:
@@ -342,8 +375,6 @@ class KgTranscripts(Workload):
             # instead of the iterative path's local checkpoints
             lineage = labels._jdf.queryExecution().analyzed().rdd().toDebugString()
             self.cc_fast = int("ParallelCollectionRDD" in lineage)
-        self.mentions = tracer.rows[f"{run_id}/kg.mentions"]
-        self.links = tracer.rows[f"{run_id}/kg.linking"]
         for df in (todo, turns, ments, linked, canon, m_triples):
             df.unpersist()
 
@@ -359,15 +390,20 @@ class KgTranscripts(Workload):
         rows = pc.binary_join_element_wise(
             bucket, *(t[c] for c in TRIPLE_COLS), "\x1f")
         got = gen.digest(rows.to_pylist())
+        manifest = sorted(tuple(r.values()) for r in pq.read_table(
+            f"{out}/manifest", columns=list(self.MANIFEST)).to_pylist())
+        turns, mentions, links, triples = (
+            sum(r[i] for r in manifest) for i in range(1, len(self.MANIFEST)))
         expected = (self.TURN_TRIPLES * self.turns + self.tool_turns
-                    + self.MENTION_TRIPLES * self.links)
+                    + self.MENTION_TRIPLES * links)
         # every detected mention has dictionary candidates, so all link
-        ok = got[0] == expected and self.links == self.mentions
+        ok = (got[0] == expected == triples and turns == self.turns
+              and links == mentions)
         if self.pinned is not None:
             ok = ok and list(got) == [self.pinned[0], int(self.pinned[1])]
-        # passes of one run must agree with each other
-        self.seen = self.seen or got
-        return ok and got == self.seen, got[0]
+        # passes of one run (plain and traced) must agree with each other
+        self.seen = self.seen or (got, manifest)
+        return ok and (got, manifest) == self.seen, got[0]
 
     def diagnostics(self, layers):
         rows = {n: layers[n]["rows_out"] for n in layers}
