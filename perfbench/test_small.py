@@ -3,7 +3,7 @@ same output checks as a full run.
 
     python3 -m pytest perfbench/test_small.py -q
 
-Each run case starts its own Spark JVM (about 30-80 s each on two cores).
+Each run case starts its own Spark JVM (about 30-80 s each).
 """
 
 from __future__ import annotations

@@ -44,7 +44,11 @@ class Workload:
     name = ""
     layers: tuple[str, ...] = ()
     extras: tuple[str, ...] = ()   # per-layer metrics beyond LAYER_METRICS
-    min_warm = 1                   # warm passes a run makes at least
+    #: warm passes left out of ``wall_s``: the JVM's JIT still speeds the
+    #: first ones up, and a median over them would depend on how many of
+    #: them fit into ``--seconds``
+    warmup = 1
+    min_warm = 3                   # warm passes in ``wall_s`` at least
     #: a workload whose layers this one's traced passes also run, on the
     #: companion's own inputs and with its output check; untraced passes
     #: (and so the end-to-end metrics) leave it out
@@ -161,9 +165,9 @@ class Csvw2RdfTable(Workload):
               "plans.csvw2rdf.codegen_compiles")
     ROWS = {"full": 30_000, "small": 2_000}
     PARTS = 4
-    # the first warm passes still plan with JIT-cold optimizer code; with a
-    # 3-pass median one such pass does not move wall_s
-    min_warm = 3
+    # passes are short: most of a pass is driver-side plan building, which
+    # the JIT is still speeding up in the first warm pass
+    min_warm = 4
     # the reverse direction uses the same terms; its layers are measured
     # here so that a traced run of a listed workload covers them
     companion = Rdf2CsvwTable
@@ -278,6 +282,8 @@ class KgTranscripts(Workload):
               "kg.cc.edges", "kg.cc.driver_fast_path", "kg.linking.task_skew",
               "kg.cc.task_skew", "kg.pipeline.write.task_skew")
     CONVS = {"full": 5_000, "small": 500}
+    # the first warm pass is still JIT-slow, by 10-60%: more when the
+    # machine is slow, as then the JIT compiles behind the passes for longer
     BUCKETS = 2   # one bucket per core
     PARTS = 4
     TURN_TRIPLES = 7   # per turn, plus one more when the turn names a tool
