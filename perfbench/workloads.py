@@ -283,7 +283,9 @@ class KgTranscripts(Workload):
               "kg.cc.task_skew", "kg.pipeline.write.task_skew")
     CONVS = {"full": 5_000, "small": 500}
     # the first warm pass is still JIT-slow, by 10-60%: more when the
-    # machine is slow, as then the JIT compiles behind the passes for longer
+    # machine is slow, as then the JIT compiles behind the passes for longer.
+    # Two timed passes: each costs 8-13 s of the regression runs' budget
+    min_warm = 2
     BUCKETS = 2   # one bucket per core
     PARTS = 4
     TURN_TRIPLES = 7   # per turn, plus one more when the turn names a tool
